@@ -382,8 +382,11 @@ def cmd_read(spark: SparkSession, args) -> int:
 
         groups = _require_groups(spark, args.store)
         rows = (
-            resolve_relation_members(groups, _base_points(store))
-            .filter(F.col("group_id") == eid)
+            resolve_relation_members(
+                groups,
+                _base_points(store),
+                roots=groups.filter(F.col("group_id") == eid),
+            )
             .orderBy("depth", "member_id")
             .collect()
         )

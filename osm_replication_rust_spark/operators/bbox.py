@@ -11,15 +11,17 @@ Set-based equivalent (SURVEY.md §4.3 #4): because OSM diffs order nodes
 before ways before relations, the per-row running maps are equivalent to
 a staged batch computation over the full diff:
 
-  stage 1  point bbox   = old coord ∪ new coord          (union + agg)
-  stage 2  way bbox     = min/max over member points     (explode + join + agg)
-  stage 3  relation bbox= fixpoint over members           (bounded iterative
-           (points, ways, relations)                       join + agg)
+  stage 1  point bbox = old coord ∪ new coord              (union + agg)
+  stage 2  group bbox = min/max over the point bboxes of    (closure + join
+           (ways and    every leaf member the group's        + agg)
+           relations)   member closure reaches
 
-Cycles between relations (reference guard /root/reference/src/osmxml/bbox.rs:112-115)
-are handled by the bounded monotone iteration: unions only grow, so the
-loop converges; back-edges simply stop contributing new extent.
-Missing references contribute nothing (tolerated, reference
+A way or relation's bbox is the union of its members' bboxes, so it is
+the union over the leaf points reachable from it — one aggregate over
+the cycle-safe member closure (operators/resolve.member_closure). The
+closure's visited set is the reference's cycle guard
+(/root/reference/src/osmxml/bbox.rs:112-115): a back-edge adds no new
+leaf. Missing references contribute nothing (tolerated, reference
 /root/reference/src/osmbin.rs:427-430).
 """
 
@@ -27,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .resolve import member_closure
 
 def _point_aggs():
     # built lazily: Column construction needs an active SparkContext
@@ -64,7 +68,6 @@ def annotate_diff_bboxes(
     elements: DataFrame,
     base: DataFrame,
     stored_groups: DataFrame | None = None,
-    max_depth: int = 20,
     namespace_ids: bool = False,
 ) -> DataFrame:
     """bbox per changed element of a parsed three-kind diff
@@ -78,9 +81,9 @@ def annotate_diff_bboxes(
 
     Returns (element_id, kind, minlat, maxlat, minlon, maxlon);
     elements none of whose geometry resolves are absent (the reference
-    emits no <bbox> child then, bbox.rs:145-163). The relation
-    fixpoint is cycle-safe (monotone union; the 7801⇄7802-style cycle
-    stops contributing, bbox.rs:112-115).
+    emits no <bbox> child then, bbox.rs:145-163). The member closure is
+    cycle-safe (the 7801⇄7802-style cycle contributes nothing,
+    bbox.rs:112-115).
 
     Deviation (documented): for an element id occurring MORE THAN ONCE
     in one diff the reference emits a per-occurrence running bbox in
@@ -88,222 +91,80 @@ def annotate_diff_bboxes(
     bbox for every occurrence — identical for the last occurrence,
     which is the one the *_modified map carries forward.
 
-    Scale: ``stored_groups`` is pruned to the member-closure of the
-    changed elements (iterative semi-joins, ``max_depth`` bound) before
-    the fixpoint, so the expensive stages touch only the diff's
-    neighbourhood, never the whole store."""
+    Scale: the closure is seeded from the changed elements only, so the
+    group stage touches the diff's neighbourhood, never the whole
+    store."""
     from ..sources.osc import elements_to_engine
 
     points, gch = elements_to_engine(elements, namespace_ids=namespace_ids)
     pb = point_bboxes(base, points)  # changed nodes: old ∪ new
-
-    # effective membership of changed composites = stored ∪ new refs
-    # (the reference expands BOTH expand_bbox_way_id(stored) and
-    # expand_bbox_way_only(new), bbox.rs:86-89)
-    changed = gch.select(
-        "group_id", "kind", F.col("new_members").alias("members")
-    )
-    if stored_groups is not None:
-        stored_for_changed = stored_groups.join(
-            changed.select("group_id").distinct(), "group_id", "left_semi"
-        ).select("group_id", "kind", "members")
-        changed = changed.unionByName(stored_for_changed)
-    eff_changed = (
-        changed.select("group_id", "kind", F.explode_outer("members").alias("m"))
-        .groupBy("group_id", "kind")
-        .agg(F.collect_list("m").alias("members"))
-    )
-
-    # resolution universe: changed composites + the stored groups their
-    # members transitively reference (pruned reachability, not the store)
-    resolution = eff_changed
-    if stored_groups is not None:
-        frontier = (
-            _member_edges(eff_changed)
-            .filter(F.col("ref_type") == "group")
-            .select(F.col("ref").alias("group_id"))
-            .distinct()
-            .join(eff_changed.select("group_id"), "group_id", "left_anti")
+    if stored_groups is None:  # nothing stored: the diff's own lists
+        stored_groups = gch.select(
+            "group_id", "kind", F.col("new_members").alias("members")
         )
-        seen = frontier
-        pinned = []  # per-iteration caches, released once resolution is cut
-        for _ in range(max_depth):
-            if frontier.isEmpty():
-                break
-            hit = stored_groups.join(frontier, "group_id", "left_semi").select(
-                "group_id", "kind", "members"
-            ).persist()
-            pinned.append(hit)
-            resolution = resolution.unionByName(hit)
-            frontier = (
-                _member_edges(hit)
-                .filter(F.col("ref_type") == "group")
-                .select(F.col("ref").alias("group_id"))
-                .distinct()
-                .join(seen, "group_id", "left_anti")
-                .join(eff_changed.select("group_id"), "group_id", "left_anti")
-                .persist()
-            )
-            pinned.append(frontier)
-            seen = seen.unionByName(frontier)
-        if pinned:
-            # cut the fixpoint-deep union lineage, then release every
-            # per-iteration cache — long-lived sessions (the streaming
-            # path calls this per micro-batch) must not accumulate RDDs
-            resolution = resolution.localCheckpoint(eager=True)
-            for df in pinned:
-                df.unpersist()
+    gb = group_bboxes(stored_groups, pb, changes=gch, base=base)
+    bb_cols = ["minlat", "maxlat", "minlon", "maxlon"]
+    nodes_out = pb.select(
+        F.col("image_id").alias("element_id"), F.lit("node").alias("kind"), *bb_cols
+    )
+    comps_out = gb.select(F.col("group_id").alias("element_id"), "kind", *bb_cols)
+    return nodes_out.unionByName(comps_out)
 
-    # point resolver: changed-node bboxes ∪ stored coords of every
-    # referenced point (degenerate bboxes), referenced set only
-    refs = (
-        _member_edges(resolution)
-        .filter(F.col("ref_type") == "image")
-        .select(F.col("ref").alias("image_id"))
-        .distinct()
-    )
-    stored_pts = base.join(refs, "image_id", "left_semi").select(
-        "image_id",
-        F.col("lat").cast("long").alias("minlat"),
-        F.col("lat").cast("long").alias("maxlat"),
-        F.col("lon").cast("long").alias("minlon"),
-        F.col("lon").cast("long").alias("maxlon"),
-    )
-    resolver = (
-        pb.unionByName(stored_pts)
-        .groupBy("image_id")
+
+def group_bboxes(
+    groups: DataFrame,
+    point_bbox: DataFrame,
+    changes: DataFrame | None = None,
+    base: DataFrame | None = None,
+) -> DataFrame:
+    """bboxes of composite groups (ways + relations): min/max over the
+    bboxes of every point their member closure reaches (one join and
+    one aggregate over :func:`resolve.member_closure`).
+
+    Without ``changes`` every group of ``groups`` (group_id, kind,
+    members) is a root and expands through its own member list. With
+    ``changes`` — a diff's way/relation rows (group_id[, kind]
+    [, new_members]) — only the changed groups are roots; a changed
+    group expands through its stored ∪ new member list (the reference
+    expands both, bbox.rs:86-89) and every other group through its
+    stored list. ``point_bbox`` (image_id, minlat, maxlat, minlon,
+    maxlon) resolves point refs; with ``base`` (image_id, lat, lon) a
+    point also contributes its stored coordinate.
+
+    Returns (group_id, kind, minlat, maxlat, minlon, maxlon); groups
+    none of whose members resolve are absent (the reference emits no
+    bbox child in that case, /root/reference/src/osmxml/bbox.rs:145-163).
+    Missing members contribute nothing; cycles stop contributing."""
+    links = groups.select("group_id", "members")
+    kinds = groups.select("group_id", "kind")
+    roots = groups
+    if changes is not None:
+        roots = changes
+        if "new_members" in changes.columns:
+            links = links.unionByName(
+                changes.select("group_id", F.col("new_members").alias("members"))
+            )
+        if "kind" in changes.columns:
+            kinds = kinds.unionByName(changes.select("group_id", "kind"))
+    if base is not None:
+        point_bbox = point_bbox.unionByName(
+            base.select(
+                "image_id",
+                F.col("lat").cast("long").alias("minlat"),
+                F.col("lat").cast("long").alias("maxlat"),
+                F.col("lon").cast("long").alias("minlon"),
+                F.col("lon").cast("long").alias("maxlon"),
+            )
+        )
+    return (
+        member_closure(links, roots)
+        .join(kinds, "group_id")
+        .join(point_bbox.withColumnRenamed("image_id", "ref"), "ref")
+        .groupBy("group_id", "kind")
         .agg(
             F.min("minlat").alias("minlat"),
             F.max("maxlat").alias("maxlat"),
             F.min("minlon").alias("minlon"),
             F.max("maxlon").alias("maxlon"),
         )
-    )
-
-    gb = group_bboxes(resolution, resolver).join(
-        eff_changed.select("group_id").distinct(), "group_id", "inner"
-    )
-    nodes_out = points.select(F.col("image_id").alias("element_id")).distinct().join(
-        pb.withColumnRenamed("image_id", "element_id"), "element_id", "inner"
-    ).select(
-        "element_id",
-        F.lit("node").alias("kind"),
-        "minlat",
-        "maxlat",
-        "minlon",
-        "maxlon",
-    )
-    comps_out = gb.select(
-        F.col("group_id").alias("element_id"),
-        F.when(F.col("kind") == "way", "way").otherwise("relation").alias("kind"),
-        "minlat",
-        "maxlat",
-        "minlon",
-        "maxlon",
-    )
-    return nodes_out.unionByName(comps_out)
-
-
-def _member_edges(groups: DataFrame) -> DataFrame:
-    """(group_id, kind, ref, ref_type) — the exploded membership edge list
-    (analog of way node-refs and relation members,
-    /root/reference/src/osm.rs:49-114)."""
-    return groups.select(
-        "group_id",
-        "kind",
-        F.explode("members").alias("m"),
-    ).select(
-        "group_id",
-        "kind",
-        F.col("m.ref").alias("ref"),
-        F.col("m.type").alias("ref_type"),
-    )
-
-
-def group_bboxes(
-    groups: DataFrame,
-    point_bbox: DataFrame,
-    point_id_col: str = "image_id",
-    max_iters: int = 20,
-) -> DataFrame:
-    """bboxes of composite groups (ways + relations) from member bboxes.
-
-    Returns (group_id, kind, minlat, maxlat, minlon, maxlon); groups none
-    of whose members resolve are absent (reference emits no bbox child in
-    that case, /root/reference/src/osmxml/bbox.rs:145-163).
-
-    Every join discriminates on ref_type (image vs group) so an id
-    collision across the two namespaces cannot pollute a bbox; the
-    fixpoint loop runs until the convergence signature stabilises
-    (max_iters is a safety bound well above any real member-chain depth,
-    not the expected iteration count).
-    """
-    edges = _member_edges(groups).persist()
-    pt = point_bbox.select(
-        F.col(point_id_col).alias("ref"), "minlat", "maxlat", "minlon", "maxlon"
-    )
-
-    bbox_aggs = [
-        F.min("minlat").alias("minlat"),
-        F.max("maxlat").alias("maxlat"),
-        F.min("minlon").alias("minlon"),
-        F.max("maxlon").alias("maxlon"),
-    ]
-    bb_cols = ["group_id", "minlat", "maxlat", "minlon", "maxlon"]
-
-    # stage 2: ways (point members only; group-typed refs in a way are
-    # not a thing in the data model, and the filter enforces it)
-    way_edges = edges.filter(
-        (F.col("kind") == "way") & (F.col("ref_type") == "image")
-    )
-    way_bbox = (
-        way_edges.join(pt, "ref", "inner").groupBy("group_id").agg(*bbox_aggs)
-    )
-
-    # stage 3: relations — bounded monotone fixpoint. The iteration only
-    # grows bboxes (mins decrease, maxs increase) and only adds rows, so
-    # a single aggregate signature detects convergence in one job
-    # instead of two exceptAll shuffles.
-    rel_pt = (
-        edges.filter((F.col("kind") == "relation") & (F.col("ref_type") == "image"))
-        .join(pt, "ref", "inner")
-        .select(*bb_cols)
-        .persist()
-    )
-    rel_gp = edges.filter(
-        (F.col("kind") == "relation") & (F.col("ref_type") == "group")
-    ).persist()
-    group_resolved = way_bbox  # (group_id, bbox) resolvable as 'group' refs
-    rel_bbox = None
-    prev_sig = None
-    for _ in range(max_iters):
-        via_groups = rel_gp.join(
-            group_resolved.select(
-                F.col("group_id").alias("ref"), "minlat", "maxlat", "minlon", "maxlon"
-            ),
-            "ref",
-            "inner",
-        ).select(*bb_cols)
-        new_rel = (
-            rel_pt.unionByName(via_groups).groupBy("group_id").agg(*bbox_aggs)
-        ).localCheckpoint(eager=True)  # truncate the growing lineage
-        sig = new_rel.agg(
-            F.count(F.lit(1)),
-            F.sum("minlat"),
-            F.sum("maxlat"),
-            F.sum("minlon"),
-            F.sum("maxlon"),
-        ).collect()[0]
-        rel_bbox = new_rel
-        if tuple(sig) == prev_sig:
-            break
-        prev_sig = tuple(sig)
-        group_resolved = way_bbox.unionByName(rel_bbox)
-
-    ways = groups.select("group_id", "kind").join(way_bbox, "group_id", "inner")
-    rels = groups.select("group_id", "kind").join(
-        rel_bbox if rel_bbox is not None else way_bbox.limit(0), "group_id", "inner"
-    )
-    return ways.filter(F.col("kind") == "way").unionByName(
-        rels.filter(F.col("kind") == "relation")
     )

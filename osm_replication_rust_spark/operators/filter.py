@@ -18,9 +18,10 @@ against ALL regions is equivalent (proof in SURVEY.md §4.3 #7); we
 implement the flattened one-pass join (scale path) and a literal
 cascade (test oracle) and assert they agree.
 
-Existential membership (reference P4/P5):
-  way ∈ poly      ⇔ ∃ member point ∈ poly         (left semi join)
-  relation ∈ poly ⇔ ∃ member ∈ poly, recursively  (iterative semi join)
+Existential membership (reference P4/P5), for ways and relations alike:
+  group ∈ poly ⇔ ∃ point in the group's member closure ∈ poly
+(one join + one aggregate over operators/resolve.member_closure, the
+cycle-safe recursive member walk).
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geometry import BUFFER_DECIMICRO, MultiPolygon
 from ..functions.coords import DEFAULT_RES
+from .resolve import member_closure
 from .spatial_join import assign_regions
 
 
@@ -150,87 +152,21 @@ def cascade_classify(
 # ---------------------------------------------------------------------------
 
 def groups_in_regions_buffered(
-    groups: DataFrame,
-    member_assignments: DataFrame,
-    max_iters: int = 20,
+    closure: DataFrame, member_assignments: DataFrame
 ) -> DataFrame:
-    """(group_id, kind, region_id, in_poly, in_buffer) for every group
-    with >=1 member matching the region's buffered polygon.
+    """(group_id, region_id, in_poly, in_buffer) for every root of
+    ``closure`` (resolve.member_closure) with >=1 leaf member matching
+    the region's buffered polygon: one join and one aggregate.
 
     ``member_assignments`` is (image_id, region_id, in_poly, in_buffer)
-    — per-point results of assign_regions. Ways resolve directly;
-    relations OR-propagate (in_poly, in_buffer) up group->group edges to
-    a monotone fixpoint (booleans only grow, so the loop converges;
-    cycles stop contributing — reference guard
-    /root/reference/src/osmxml/filter.rs:159-169). Missing members
-    contribute nothing."""
-    edges = groups.select(
-        "group_id", "kind", F.explode("members").alias("m")
-    ).select(
-        "group_id", "kind", F.col("m.ref").alias("ref"), F.col("m.type").alias("ref_type")
-    ).persist()
-
-    pt = member_assignments.select(
-        F.col("image_id").alias("ref"), "region_id", "in_poly", "in_buffer"
-    )
-    flag_aggs = [
-        F.max("in_poly").alias("in_poly"),
-        F.max("in_buffer").alias("in_buffer"),
-    ]
-    cols = ["group_id", "region_id", "in_poly", "in_buffer"]
-
-    way_flags = (
-        edges.filter((F.col("kind") == "way") & (F.col("ref_type") == "image"))
-        .join(pt, "ref", "inner")
+    — per-point results of assign_regions. A group is in a region iff
+    any point its member closure reaches is; cycles add no leaf
+    (reference guard /root/reference/src/osmxml/filter.rs:159-169) and
+    missing members join nothing."""
+    return (
+        closure.join(member_assignments.withColumnRenamed("image_id", "ref"), "ref")
         .groupBy("group_id", "region_id")
-        .agg(*flag_aggs)
-        .persist()
-    )
-
-    rel_pt = (
-        edges.filter((F.col("kind") == "relation") & (F.col("ref_type") == "image"))
-        .join(pt, "ref", "inner")
-        .select(*cols)
-        .persist()
-    )
-    rel_gp = edges.filter(
-        (F.col("kind") == "relation") & (F.col("ref_type") == "group")
-    ).persist()
-
-    resolved = way_flags  # groups resolvable as 'group' refs
-    rel_flags = None
-    prev_sig = None
-    for _ in range(max_iters):
-        via_groups = rel_gp.join(
-            resolved.select(
-                F.col("group_id").alias("ref"), "region_id", "in_poly", "in_buffer"
-            ),
-            "ref",
-            "inner",
-        ).select(*cols)
-        new_rel = (
-            rel_pt.unionByName(via_groups)
-            .groupBy("group_id", "region_id")
-            .agg(*flag_aggs)
-        ).localCheckpoint(eager=True)
-        sig = new_rel.agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("in_poly").cast("long")),
-            F.sum(F.col("in_buffer").cast("long")),
-        ).collect()[0]
-        rel_flags = new_rel
-        if tuple(sig) == prev_sig:
-            break
-        prev_sig = tuple(sig)
-        resolved = way_flags.unionByName(rel_flags)
-
-    kinds = groups.select("group_id", "kind").distinct()
-    ways = way_flags.join(kinds.filter(F.col("kind") == "way"), "group_id")
-    rels = (
-        rel_flags if rel_flags is not None else way_flags.limit(0)
-    ).join(kinds.filter(F.col("kind") == "relation"), "group_id")
-    return ways.unionByName(rels).select(
-        "group_id", "kind", "region_id", "in_poly", "in_buffer"
+        .agg(F.max("in_poly").alias("in_poly"), F.max("in_buffer").alias("in_buffer"))
     )
 
 
@@ -264,11 +200,10 @@ def classify_group_diff(
     this requires the change row to carry both ``kind`` and
     ``new_members``; creates without them cannot be classified and
     raise ValueError at plan time rather than silently emitting
-    nothing. ``groups``: stored (group_id, kind, members). ``base``:
-    stored points (image_id, lat, lon). Returns
+    nothing. ``groups``: stored (group_id, kind, members); a changed
+    relation's unchanged member groups resolve through their stored
+    lists. ``base``: stored points (image_id, lat, lon). Returns
     (group_id, kind, action, region_id, out_action)."""
-    from .spatial_join import assign_regions as _assign
-
     changed = group_changes.select("group_id", "action")
     supports_create = {"new_members", "kind"} <= set(group_changes.columns)
     if not supports_create:
@@ -281,59 +216,38 @@ def classify_group_diff(
                 "change rows to carry (kind, new_members) — a created "
                 "group has no stored member list to classify from"
             )
-    eff_groups = groups.select("group_id", "kind", "members").join(
-        changed.select("group_id"), "group_id", "left_semi"
-    )
+    links = groups.select("group_id", "members")
+    kinds = groups.select("group_id", "kind")
     if "new_members" in group_changes.columns:
         # deletes classify from STORED geometry (the reference's delete
         # branch, filter.rs:250-254): a bare <delete><way id=../></delete>
         # parses to an EMPTY member list, and letting it override would
         # strip every member ref and silently drop the delete from the
-        # classification. Only create/modify carry the diff's list.
+        # classification. Only create/modify carry the diff's list; a
+        # create the store has never seen expands through it alone.
         overrides = group_changes.filter(
             F.col("new_members").isNotNull() & (F.col("action") != "delete")
-        ).select("group_id", F.col("new_members").alias("_nm"))
-        eff_groups = (
-            eff_groups.join(overrides, "group_id", "left")
-            .withColumn("members", F.coalesce(F.col("_nm"), F.col("members")))
-            .drop("_nm")
-        )
-        if "kind" in group_changes.columns:
-            # creates of groups the store has never seen: their member
-            # list IS the diff element's list — union them in so the
-            # flag computation (and therefore the classification) sees
-            # them like any stored group
-            created = (
-                group_changes.filter(
-                    F.col("new_members").isNotNull()
-                    & (F.col("action") != "delete")
-                )
-                .select("group_id", "kind", F.col("new_members").alias("members"))
-                .join(groups.select("group_id"), "group_id", "left_anti")
-            )
-            eff_groups = eff_groups.unionByName(created)
+        ).select("group_id", F.col("new_members").alias("members"))
+        links = links.join(overrides, "group_id", "left_anti").unionByName(overrides)
+    if "kind" in group_changes.columns:
+        kinds = kinds.unionByName(group_changes.select("group_id", "kind"))
 
-    # only member points actually referenced by a changed group need the
-    # (expensive) region assignment: semi-join the store first
-    refs = (
-        eff_groups.select(F.explode("members").alias("m"))
-        .filter(F.col("m.type") == "image")
-        .select(F.col("m.ref").alias("image_id"))
-        .distinct()
-    )
-    member_pts = base.join(refs, "image_id", "left_semi")
-    assignments = _assign(
-        member_pts,
+    closure = member_closure(links, changed)
+    # only member points a changed group reaches need the (expensive)
+    # region assignment: semi-join the store first
+    refs = closure.select(F.col("ref").alias("image_id")).distinct()
+    assignments = assign_regions(
+        base.join(refs, "image_id", "left_semi"),
         regions,
         res=res,
         buffer=buffer,
         keep_cols=["image_id"],
     )
-
-    flags = groups_in_regions_buffered(eff_groups, assignments)
     return (
-        flags.join(changed, "group_id")
+        groups_in_regions_buffered(closure, assignments)
         .filter(F.col("in_buffer"))
+        .join(changed, "group_id")
+        .join(kinds.distinct(), "group_id")
         .select(
             "group_id",
             "kind",
@@ -344,60 +258,3 @@ def classify_group_diff(
             .alias("out_action"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# existential group membership (P4/P5)
-# ---------------------------------------------------------------------------
-
-def groups_in_regions(
-    groups: DataFrame,
-    member_regions: DataFrame,
-    max_iters: int = 5,
-) -> DataFrame:
-    """(group_id, region_id) for every group with ≥1 member in the region.
-
-    ``member_regions`` is (image_id, region_id) — the in-polygon point
-    assignments. Ways resolve directly (semi join); relations iterate to
-    a bounded fixpoint over group→group edges; cycles stop contributing
-    (reference guard /root/reference/src/osmxml/filter.rs:159-169).
-    Missing members contribute nothing."""
-    edges = groups.select(
-        "group_id", "kind", F.explode("members").alias("m")
-    ).select("group_id", "kind", F.col("m.ref").alias("ref"), F.col("m.type").alias("ref_type"))
-
-    pt = member_regions.select(F.col("image_id").alias("ref"), "region_id")
-
-    resolved = (
-        edges.filter(F.col("ref_type") == "image")
-        .join(pt, "ref", "inner")
-        .select("group_id", "region_id")
-        .distinct()
-        .persist()
-    )
-    group_edges = edges.filter(F.col("ref_type") == "group").select(
-        "group_id", F.col("ref").alias("child_id")
-    ).persist()
-
-    # one action per round: the previous round's count is carried in a
-    # Python variable instead of re-counting the persisted frame
-    prev_count = resolved.count()
-    for _ in range(max_iters):
-        via_children = (
-            group_edges.join(
-                resolved.select(F.col("group_id").alias("child_id"), "region_id"),
-                "child_id",
-                "inner",
-            )
-            .select("group_id", "region_id")
-            .distinct()
-        )
-        new_resolved = resolved.unionByName(via_children).distinct().persist()
-        new_count = new_resolved.count()
-        resolved.unpersist()
-        resolved = new_resolved
-        if new_count == prev_count:
-            break
-        prev_count = new_count
-    group_edges.unpersist()
-    return resolved

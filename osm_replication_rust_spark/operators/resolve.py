@@ -7,7 +7,8 @@ members recursively with a cycle guard (/root/reference/src/osm.rs:219-246).
 Spark shape (SURVEY.md S9/S10):
   posexplode(members) -> join the point table -> collect_list over a
   window ordered by member position (order preserved exactly);
-  relations iterate type-discriminated joins to bounded depth.
+  relations walk the cycle-safe member closure (:func:`member_closure`,
+  shared with the bbox and filter stages).
 Missing refs resolve to nothing (tolerated, like the bbox/filter paths).
 """
 
@@ -17,7 +18,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -62,76 +63,86 @@ def resolve_way_full(
     )
 
 
+def member_closure(
+    groups: DataFrame, roots: DataFrame | None = None
+) -> DataFrame:
+    """The cycle-safe leaf-member closure — the one member-graph walk
+    behind bbox annotation, the group filter and relation_full (the
+    reference's recursive member walk with a cycle guard,
+    /root/reference/src/osm.rs:219-246).
+
+    ``groups`` carries (group_id, members): the member lists the walk
+    expands through. ``roots`` carries the group_id of every group to
+    close over (default: every group in ``groups``). Returns
+    (group_id, ref, depth): one row per point-typed member reached from
+    each root, ``group_id`` being the ROOT and ``depth`` the BFS level
+    of the member (1 = a direct member of the root). A point reached
+    along several paths, or from a root listed twice, appears once per
+    path; consumers aggregate.
+    Refs are not checked against any point table: a missing point
+    simply joins nothing downstream.
+
+    Walk: the roots are level 0. Each round joins the current level
+    against the group-typed member edges, collects the (root, group)
+    pairs found and anti-joins them against the visited set on the
+    driver; the walk ends when a round finds no new pair. The visited
+    set is what makes it stop on cycles, so there is no depth bound.
+    Only levels 1+ reach the driver: the groups a root reaches through
+    group-typed refs, bounded by the roots' reachable relation graph
+    rather than by the store. Nothing is persisted, and the returned
+    frame's lineage is one join over a local relation."""
+    spark = groups.sparkSession
+    edges = groups.select("group_id", F.explode("members").alias("m")).select(
+        F.col("group_id").alias("node"),
+        F.col("m.ref").alias("ref"),
+        F.col("m.type").alias("ref_type"),
+    )
+    links = edges.filter(F.col("ref_type") == "group").select(
+        "node", F.col("ref").alias("child")
+    )
+    seeds = (groups if roots is None else roots).select("group_id")
+    level = seeds.select("group_id", F.col("group_id").alias("node"))
+    visited: dict[tuple[str, str], int] = {}
+    depth = 0
+    while True:
+        depth += 1
+        new = []
+        for r in level.join(links, "node").select("group_id", "child").collect():
+            pair = (r.group_id, r.child)
+            if r.child != r.group_id and pair not in visited:
+                visited[pair] = depth
+                new.append(pair)
+        if not new:
+            break
+        level = spark.createDataFrame(new, "group_id string, node string")
+    deep = spark.createDataFrame(
+        [(g, n, d) for (g, n), d in visited.items()],
+        "group_id string, node string, depth int",
+    )
+    reached = seeds.select(
+        "group_id", F.col("group_id").alias("node"), F.lit(0).alias("depth")
+    ).unionByName(deep)
+    return reached.join(
+        edges.filter(F.col("ref_type") == "image"), "node"
+    ).select("group_id", "ref", (F.col("depth") + 1).alias("depth"))
+
+
 def resolve_relation_members(
     groups: DataFrame,
     points: DataFrame,
     point_id: str = "image_id",
-    max_depth: int = 5,
+    roots: DataFrame | None = None,
 ) -> DataFrame:
-    """Transitive closure: (group_id, member_id, depth) — every point
-    reachable from each relation through way/relation edges, bounded
-    depth, cycle-safe (a back edge adds nothing new, the monotone
-    frontier empties). The set-based analog of relation_full."""
-    edges = groups.select(
-        "group_id", "kind", F.explode("members").alias("m")
-    ).select(
-        "group_id",
-        "kind",
-        F.col("m.ref").alias("ref"),
-        F.col("m.type").alias("ref_type"),
-    ).persist()
-
-    point_ids = points.select(F.col(point_id).alias("ref"))
-
-    rel_edges = edges.filter(F.col("kind") == "relation")
-    # direct point members (depth 1); group members expand below
-    reached = (
-        rel_edges.filter(F.col("ref_type") == "image")
-        .join(point_ids, "ref", "left_semi")
-        .select("group_id", F.col("ref").alias("member_id"), F.lit(1).alias("depth"))
-        .persist()
-    )
-    # frontier of group-typed refs still to expand: (root group, current node)
-    frontier = rel_edges.filter(F.col("ref_type") == "group").select(
-        "group_id", F.col("ref").alias("node")
-    ).distinct().persist()
-
-    all_edges = edges.select(
-        F.col("group_id").alias("node"),
-        F.col("ref"),
-        F.col("ref_type"),
-    )
-
-    # cycle guard: accumulated visited set of (root, node) pairs — a
-    # 2-cycle's back edge must be excepted against EVERY prior frontier,
-    # not just the immediately-previous one, or it oscillates and is
-    # re-expanded until max_depth
-    visited = frontier
-
-    for depth in range(2, max_depth + 2):
-        if frontier.isEmpty():
-            break
-        step = frontier.join(all_edges, "node", "inner")
-        new_pts = (
-            step.filter(F.col("ref_type") == "image")
-            .join(point_ids, "ref", "left_semi")
-            .select("group_id", F.col("ref").alias("member_id"), F.lit(depth).alias("depth"))
-        )
-        reached = reached.unionByName(new_pts).persist()
-        frontier = (
-            step.filter(F.col("ref_type") == "group")
-            .select("group_id", F.col("ref").alias("node"))
-            .distinct()
-            .exceptAll(visited)
-            .persist()
-        )
-        visited = visited.unionByName(frontier).persist()
-
-    w = Window.partitionBy("group_id", "member_id").orderBy("depth")
+    """(group_id, member_id, depth) — every stored point reachable from
+    each relation of ``roots`` (default: every relation in ``groups``)
+    through way/relation edges, at its BFS first-visit depth: the
+    set-based analog of relation_full over :func:`member_closure`."""
+    roots = (groups if roots is None else roots).filter(F.col("kind") == "relation")
     return (
-        reached.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("group_id", "member_id", "depth")
+        member_closure(groups, roots)
+        .join(points.select(F.col(point_id).alias("ref")), "ref", "left_semi")
+        .groupBy("group_id", F.col("ref").alias("member_id"))
+        .agg(F.min("depth").alias("depth"))
     )
 
 

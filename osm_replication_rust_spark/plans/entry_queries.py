@@ -2801,8 +2801,8 @@ def _group_diff_oracle() -> str:
     ways = orders (members = their lineitems' derived points), relations
     = customers (members = their orders as group refs). Existential
     in_poly/in_buffer via bool_or of the generated raycast / buffer-
-    distance predicates — the same flattened semantics the relation
-    fixpoint converges to."""
+    distance predicates — the same flattened semantics the member
+    closure aggregates to."""
     from ..functions.geometry import BUFFER_DECIMICRO
 
     lat = C.sql_derived_lat("l_partkey")
@@ -2842,7 +2842,7 @@ def group_diff_classify_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference update_way/update_relation,
     /root/reference/src/osmxml/filter.rs:237-299) through the REAL
     operator — member points resolved from the store, existential
-    membership, relation flags via the group-edge fixpoint."""
+    membership, relation flags aggregated over the member closure."""
     from ..operators.filter import classify_group_diff
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -4851,11 +4851,10 @@ def multimodal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _group_bbox_oracle() -> str:
-    """DuckDB twin of the A3 fixpoint: a recursive CTE computes the
-    transitive image-closure of every group (UNION dedup terminates the
-    2-cycle), then min/max over reachable points — provably equal to the
-    monotone bbox iteration because bbox-union composes to min/max over
-    all transitively reachable members. Fixture literals are emitted
+    """DuckDB twin of A3: a recursive CTE computes the transitive
+    image-closure of every group (UNION dedup terminates the 2-cycle),
+    then min/max over reachable points — the same aggregate
+    group_bboxes takes over the member closure. Fixture literals are emitted
     from the same deterministic generator the Spark query uses."""
     from ..datagen.synth import gen_groups, gen_images
 
@@ -6922,13 +6921,16 @@ def clip_to_tiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _relation_closure_oracle(max_depth: int = 5) -> str:
+def _relation_closure_oracle() -> str:
     """DuckDB twin of S10 resolve_relation_members: min-depth transitive
     image closure via a bounded recursive CTE (depth in the tuple keeps
     the 2-cycle finite under UNION dedup; min(depth) == the BFS
-    first-visit depth the frontier iteration assigns, because the
-    shortest bounded path IS the BFS level)."""
+    first-visit depth the member closure assigns, because the shortest
+    path IS the BFS level). The bound is the fixture's group count: a
+    shortest path never repeats a group, so no first visit lies beyond
+    it."""
     _, groups_pdf, pts = _closure_fixture_pts()
+    max_depth = len(groups_pdf)
     rows = []
     for g in groups_pdf.itertuples():
         for m in g.members:
@@ -6970,8 +6972,8 @@ def _relation_closure_oracle(max_depth: int = 5) -> str:
 def relation_closure_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S10: relation_full recursive closure
     (/root/reference/src/osm.rs:219-246) through the real operator —
-    bounded-depth, cycle-safe (the fixture contains the 2-cycle pair
-    and a missing ref); depth = BFS first-visit level."""
+    cycle-safe (the fixture contains the 2-cycle pair and a missing
+    ref); depth = BFS first-visit level."""
     from ..datagen.synth import gen_groups, gen_images
     from ..operators.resolve import resolve_relation_members
 
@@ -6990,7 +6992,8 @@ def relation_closure_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("group_bbox_fixpoint", _group_bbox_oracle())
 def group_bbox_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: recursive relation-bbox resolution to fixpoint (cycle-safe).
+    """A3: recursive relation-bbox resolution over the cycle-safe
+    member closure.
     Groups synthesized deterministically; the point set comes from the
     events footprints. Oracle = recursive-CTE closure over the same
     fixture (/root/reference/src/osmxml/bbox.rs:91-127 semantics)."""

@@ -84,7 +84,6 @@ def run_update(
         # a'. composite elements: changed groups get member-closure
         # bboxes and the three-way classification, published beside the
         # point artifacts (reference stages b+c for ways/relations)
-        gbatch = None
         if groups is not None and group_diffs is not None:
             # carry (kind, new_members) through when the diff source
             # provides them: classify_group_diff needs both to classify
@@ -97,24 +96,11 @@ def run_update(
             gbatch = group_diffs.filter(F.col("state") == state).select(
                 "group_id", "action", *extra
             )
-            changed_groups = groups.join(
-                gbatch.select("group_id"), "group_id", "left_semi"
-            )
-            # member bbox source: changed-point bboxes (old ∪ new) plus
-            # degenerate bboxes of untouched stored points — the batch
-            # view the reference's running maps present to the way/
-            # relation passes (/root/reference/src/osmxml/bbox.rs:61-84)
-            untouched = base.join(
-                batch.select("image_id").distinct(), "image_id", "left_anti"
-            ).select(
-                "image_id",
-                F.col("lat").cast("long").alias("minlat"),
-                F.col("lat").cast("long").alias("maxlat"),
-                F.col("lon").cast("long").alias("minlon"),
-                F.col("lon").cast("long").alias("maxlon"),
-            )
-            member_bbox = bbox.unionByName(untouched)
-            gbx = group_bboxes(changed_groups, member_bbox)
+            # the same group bbox `cli bbox` annotates: the changed
+            # groups' member closure over stored ∪ new lists, points
+            # resolved through their old ∪ new bboxes
+            # (/root/reference/src/osmxml/bbox.rs:61-89)
+            gbx = group_bboxes(groups, bbox, changes=gbatch, base=base)
             gbx.write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"bbox_groups/state={state}")
             )

@@ -29,21 +29,31 @@ def _active_processor_flag(master: str) -> str:
     return f" -XX:ActiveProcessorCount={m.group(1)}"
 
 
+def _default_heap() -> str:
+    """Half the host's physical RAM, never above 24g, in MiB."""
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (1 << 20)
+    return f"{min(ram_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "osm_replication_rust_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build (or fetch) a SparkSession sized to its host.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or 32. ``shuffle_partitions``
-    defaults to the parallelism level — on a real cluster this would be
-    ~2-3x total cores; partition *count* scales with the cluster, the
-    plan does not change.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS, else the CPUs this process
+    may run on (its affinity mask). The driver heap defaults to
+    $SPARK_GRAFT_DRIVER_MEM, else half the host's physical RAM, capped
+    at 24g: a local-mode JVM holds every executor thread, and a heap
+    sized past the host gets the process killed instead of spilling.
+    ``shuffle_partitions`` defaults to the parallelism level — on a
+    real cluster this would be ~2-3x total cores; partition *count*
+    scales with the cluster, the plan does not change.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 
@@ -86,7 +96,7 @@ def get_spark(
         # resident; cost is a few hundred MB of driver/executor
         # metaspace at worst, independent of data scale.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_heap()))
         # only meaningful under local-cluster / a real cluster manager
         .config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "4g"))
         .config("spark.ui.enabled", "false")

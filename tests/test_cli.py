@@ -183,6 +183,50 @@ def test_cli_update_follow_streaming(spark, tmp_path):
     assert os.path.isdir(os.path.join(store, "points", "v2"))
 
 
+def test_cli_read_relation_full_one_root(spark, tmp_path, capsys):
+    """`read relation_full` closes over the requested relation only:
+    its reachable stored points at their BFS depth, nothing of any
+    other relation, and a 2-cycle terminates."""
+    from osm_replication_rust_spark.functions.coords import pack_footprint
+    from osm_replication_rust_spark.operators.merge import TableStore
+
+    store = str(tmp_path / "store")
+    TableStore(spark, os.path.join(store, "points")).init(
+        spark.createDataFrame(
+            [("n1", "", 1, 10), ("n2", "", 2, 20), ("n3", "", 3, 30)],
+            "image_id string, caption string, lat long, lon long",
+        ).select(
+            "image_id", "caption", pack_footprint(F.col("lat"), F.col("lon")).alias("phash")
+        )
+    )
+    cli._publish_groups(
+        spark,
+        store,
+        spark.createDataFrame(
+            [
+                ("w10", "way", [("n1", "image", ""), ("n9", "image", "")]),
+                ("r20", "relation", [("w10", "group", ""), ("n2", "image", "")]),
+                ("r21", "relation", [("r20", "group", "")]),
+                ("r30", "relation", [("r31", "group", ""), ("n3", "image", "")]),
+                ("r31", "relation", [("r30", "group", "")]),
+            ],
+            "group_id string, kind string, "
+            "members array<struct<ref:string,type:string,role:string>>",
+        ),
+    )
+    assert cli.main(["read", "relation_full", "21", "--store", store]) == 0
+    assert capsys.readouterr().out.splitlines() == [
+        "{'group_id': 'r21', 'member_id': 'n2', 'depth': 2}",
+        "{'group_id': 'r21', 'member_id': 'n1', 'depth': 3}",
+        "2 row(s)",
+    ]
+    assert cli.main(["read", "relation_full", "r31", "--store", store]) == 0
+    assert capsys.readouterr().out.splitlines() == [
+        "{'group_id': 'r31', 'member_id': 'n3', 'depth': 2}",
+        "1 row(s)",
+    ]
+
+
 def test_cli_read_bare_numeric_id(spark, store_dir, capsys):
     """The reference's osmbin --read takes bare numeric ids
     (/root/reference/src/bin/osmbin.rs:43-71); the CLI derives the

@@ -11,8 +11,9 @@ from osm_replication_rust_spark.operators.filter import (
     classify_diff,
     classify_group_diff,
     effective_changes,
-    groups_in_regions,
+    groups_in_regions_buffered,
 )
+from osm_replication_rust_spark.operators.resolve import member_closure
 
 M = 1_000_000
 
@@ -261,36 +262,73 @@ def test_golden_counts_all_kinds(spark, regions, images_pdf):
     n_rel = sum(1 for r in grp if r.kind == "relation")
     kept = sum(1 for r in grp if r.out_action == r.action)
     # golden values pinned from the fixed-seed fixtures (42/43/44/45):
-    # 23 point rows (test_golden_counts), 4 way + 6 relation rows of
-    # which 6 kept (the rest buffered-delete)
-    assert (len(pts), n_way, n_rel, kept) == (23, 4, 6, 6)
+    # 23 point rows (test_golden_counts), 4 way + 17 relation rows of
+    # which 13 kept (the rest buffered-delete). Changed relations
+    # resolve through their unchanged member ways and relations; a
+    # plain-Python recursive walk with brute-force ray casting over the
+    # same fixture gives the same (4, 17, 13)
+    assert (len(pts), n_way, n_rel, kept) == (23, 4, 17, 13)
 
 
 def test_groups_in_regions(spark, regions):
+    """Existential membership over the member closure: a way is in a
+    region iff a member point is, a relation iff anything it reaches
+    is, and a pure cycle reaches nothing."""
     groups = spark.createDataFrame(
         [
-            ("w1", "way", [
-                {"ref": "p_inC", "type": "image", "role": ""},
-                {"ref": "p_out", "type": "image", "role": ""},
-            ]),
-            ("w2", "way", [{"ref": "p_out", "type": "image", "role": ""}]),
-            ("r1", "relation", [{"ref": "w1", "type": "group", "role": "outer"}]),
-            ("r2", "relation", [{"ref": "r1", "type": "group", "role": "sub"}]),
-            ("c1", "relation", [{"ref": "c2", "type": "group", "role": "loop"}]),
-            ("c2", "relation", [{"ref": "c1", "type": "group", "role": "loop"}]),
+            ("w1", "way", [_m("p_inC"), _m("p_out")]),
+            ("w2", "way", [_m("p_out")]),
+            ("r1", "relation", [_m("w1", "group")]),
+            ("r2", "relation", [_m("r1", "group")]),
+            ("c1", "relation", [_m("c2", "group")]),
+            ("c2", "relation", [_m("c1", "group")]),
         ],
-        "group_id string, kind string, members array<struct<ref:string,type:string,role:string>>",
+        GROUP_SCHEMA,
     )
-    member_regions = spark.createDataFrame(
-        [("p_inC", "A"), ("p_inC", "A/B"), ("p_inC", "A/B/C")],
-        "image_id string, region_id string",
+    member_assignments = spark.createDataFrame(
+        [
+            ("p_inC", region, True, True)
+            for region in ("A", "A/B", "A/B/C")
+        ] + [("p_out", "A", False, True)],
+        "image_id string, region_id string, in_poly boolean, in_buffer boolean",
     )
-    got = {(r.group_id, r.region_id) for r in groups_in_regions(groups, member_regions).collect()}
+    flags = groups_in_regions_buffered(member_closure(groups), member_assignments)
+    got = {(r.group_id, r.region_id) for r in flags.filter("in_poly").collect()}
     assert ("w1", "A/B/C") in got and ("w1", "A") in got
     assert not any(g == "w2" for g, _ in got)  # no member inside
     assert ("r1", "A/B/C") in got  # via way
     assert ("r2", "A/B/C") in got  # via relation->relation
     assert not any(g in ("c1", "c2") for g, _ in got)  # pure cycle resolves to nothing
+    buffered = {(r.group_id, r.region_id) for r in flags.filter("in_buffer").collect()}
+    assert ("w2", "A") in buffered and ("r2", "A") in buffered
+
+
+def test_classify_group_diff_changed_relation_over_unchanged_way(spark, regions):
+    """A changed relation whose only member is an UNCHANGED stored way
+    resolves through the way's stored member list (the reference's
+    relation walk reads osmbin, filter.rs:237-299): it is kept in
+    every region its way's point lies in."""
+    M = 1_000_000
+    base = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["p_inC"], "lat": [-6 * M], "lon": [-6 * M]})
+    )
+    groups = spark.createDataFrame(
+        [
+            ("w_in", "way", [_m("p_inC")]),
+            ("r_via", "relation", [_m("w_in", "group")]),
+        ],
+        GROUP_SCHEMA,
+    )
+    changes = spark.createDataFrame(
+        pd.DataFrame({"group_id": ["r_via"], "action": ["modify"]})
+    )
+    got = {
+        (r.group_id, r.region_id): (r.kind, r.out_action)
+        for r in classify_group_diff(changes, groups, base, regions).collect()
+    }
+    for region in ("A", "A/B", "A/B/C"):
+        assert got[("r_via", region)] == ("relation", "modify")
+    assert not any(g == "w_in" for g, _ in got)  # only changed groups classify
 
 
 def test_classify_group_diff_delete_uses_stored_geometry(spark, regions):

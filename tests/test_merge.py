@@ -180,6 +180,130 @@ def test_pipeline_end_to_end(spark, regions, images_pdf, tmp_path):
     assert {"image_id", "minlat", "maxlat", "minlon", "maxlon"} <= set(bbox.columns)
 
 
+def test_run_update_releases_persisted_rdds(spark, regions, images_pdf, tmp_path):
+    """A 2-state run_update leaves the session's persisted-RDD count
+    where it found it: every stage releases what it caches."""
+    from osm_replication_rust_spark.datagen.synth import (
+        gen_diffs,
+        gen_group_diffs,
+        gen_groups,
+    )
+    from osm_replication_rust_spark.plans.pipeline import run_update
+
+    base = spark.createDataFrame(
+        images_pdf[["image_id", "caption", "phash"]].iloc[:300]
+    )
+    diffs = spark.createDataFrame(gen_diffs(images_pdf.iloc[:300], n_batches=2))
+    groups_pdf = gen_groups(images_pdf.iloc[:300])
+    groups = spark.createDataFrame(groups_pdf)
+    group_diffs = spark.createDataFrame(gen_group_diffs(groups_pdf, n_batches=2))
+    store = TableStore(spark, str(tmp_path / "images"))
+    store.init(base)
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    applied = run_update(
+        store, diffs, regions, str(tmp_path / "out"),
+        groups=groups, group_diffs=group_diffs,
+    )
+    assert applied == [1, 2]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+#: a created way over a new and a stored node, a modified relation over
+#: an UNCHANGED stored way, and a modified 2-cycle whose one relation
+#: holds a moved node
+_GROUP_DIFF = b"""<osmChange version="0.6">
+<create>
+  <node id="5" version="1" lat="-0.55" lon="-0.55"/>
+  <way id="11" version="1"><nd ref="5"/><nd ref="1"/></way>
+</create>
+<modify>
+  <node id="2" version="2" lat="0.85" lon="0.05"/>
+  <relation id="20" version="2"><member type="way" ref="10" role="outer"/></relation>
+  <relation id="30" version="2">
+    <member type="relation" ref="31" role="loop"/><member type="node" ref="2" role=""/>
+  </relation>
+  <relation id="31" version="2"><member type="relation" ref="30" role="loop"/></relation>
+</modify>
+</osmChange>"""
+
+
+def test_run_update_group_bboxes_equal_cli_annotation(spark, regions, tmp_path):
+    """run_update's bbox_groups/state=N are the way/relation rows of
+    annotate_diff_bboxes (what `cli bbox` writes) for the same diff and
+    store; the relation changed over an unchanged way gets its bbox and
+    its tile rows from the way's stored member list."""
+    from osm_replication_rust_spark.functions.coords import (
+        pack_footprint,
+        unpack_lat,
+        unpack_lon,
+    )
+    from osm_replication_rust_spark.operators.bbox import annotate_diff_bboxes
+    from osm_replication_rust_spark.plans.pipeline import run_update
+    from osm_replication_rust_spark.sources.osc import (
+        elements_df,
+        elements_to_engine,
+        parse_osc_elements,
+    )
+
+    store = TableStore(spark, str(tmp_path / "points"))
+    store.init(
+        spark.createDataFrame(
+            [("n1", "c1", -6 * M, -6 * M), ("n2", "c2", 9 * M, 0), ("n3", "c3", 21 * M, 21 * M)],
+            "image_id string, caption string, lat long, lon long",
+        ).select("image_id", "caption", pack_footprint(F.col("lat"), F.col("lon")).alias("phash"))
+    )
+    base = store.current().select(
+        "image_id",
+        unpack_lat(F.col("phash")).alias("lat"),
+        unpack_lon(F.col("phash")).alias("lon"),
+    )
+    groups = spark.createDataFrame(
+        [
+            ("w10", "way", [("n1", "image", "")]),
+            ("r20", "relation", [("w10", "group", "outer")]),
+            ("r30", "relation", [("r31", "group", "loop"), ("n2", "image", "")]),
+            ("r31", "relation", [("r30", "group", "loop")]),
+        ],
+        "group_id string, kind string, "
+        "members array<struct<ref:string,type:string,role:string>>",
+    )
+    elements = elements_df(spark, parse_osc_elements(_GROUP_DIFF, state=1))
+    want = {
+        tuple(r)
+        for r in annotate_diff_bboxes(
+            elements, base, stored_groups=groups, namespace_ids=True
+        )
+        .filter(F.col("kind") != "node")
+        .select("element_id", "kind", "minlat", "maxlat", "minlon", "maxlon")
+        .collect()
+    }
+
+    points, gch = elements_to_engine(elements, namespace_ids=True)
+    out = str(tmp_path / "out")
+    assert run_update(store, points, regions, out, groups=groups, group_diffs=gch) == [1]
+    got = {
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(out, "bbox_groups/state=1"))
+        .select("group_id", "kind", "minlat", "maxlat", "minlon", "maxlon")
+        .collect()
+    }
+    assert got == want
+    n1 = (-6 * M, -6 * M, -6 * M, -6 * M)
+    moved = (8_500_000, 9 * M, 0, 500_000)  # n2: old (9M, 0) ∪ new
+    assert {g: bb for g, _, *bb in got} == {
+        "w11": [-6 * M, -5_500_000, -6 * M, -5_500_000],
+        "r20": list(n1),
+        "r30": list(moved),
+        "r31": list(moved),
+    }
+    tiles = {
+        (r.group_id, r.region_id)
+        for r in spark.read.parquet(os.path.join(out, "tiles_groups/state=1")).collect()
+    }
+    assert {("r20", reg) for reg in ("A", "A/B", "A/B/C")} <= tiles
+
+
 def test_version_keyed_idempotent_merge(spark):
     """SURVEY §2.10: MERGE keyed on (id, version) — stale or replayed
     changes (version <= stored version, osm.rs:26) cannot regress newer
